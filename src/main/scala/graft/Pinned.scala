@@ -15,9 +15,9 @@ import scala.jdk.CollectionConverters._
   * `track` replaces the bare `.persist()` at those sites; `release` drops
   * every tracked cache for a session. Unpersisting is always safe — a block
   * evicted mid-job is recomputed from lineage — so harness code can call
-  * `release` after every query action. Memoized STAGE caches (PmQueries
-  * discCache) are deliberately not tracked: their lifecycle is the
-  * dataset-switch eviction hook.
+  * `release` after every query action. Memoized stage outputs
+  * ([[Stages]] nodes) are deliberately not tracked: their lifecycle is the
+  * registry's dataset-switch eviction.
   */
 object Pinned {
   private val reg =
@@ -94,11 +94,13 @@ object Pinned {
 
   /** Drop one frame's blocks: checkpointed (staged) frames hold theirs on
     * the underlying RDD (Dataset.unpersist only reaches CacheManager
-    * entries), persisted frames on the cached plan. */
-  def releaseFrame(df: DataFrame): Unit = df.queryExecution.analyzed match {
-    case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-    case _ => df.unpersist(blocking = false)
-  }
+    * entries), persisted frames on the cached plan. A stopped session has
+    * no blocks left to drop. */
+  def releaseFrame(df: DataFrame): Unit =
+    if (!df.sparkSession.sparkContext.isStopped) df.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case _ => df.unpersist(blocking = false)
+    }
 
   /** Count of live tracked intermediates for `s` (test hook). */
   def trackedCount(s: SparkSession): Int =

@@ -17,15 +17,22 @@ import graft.{Det, Tables}
   * The graded query joins bucketed orders x lineitem on the order key and
   * aggregates — the ONLY exchange in the plan belongs to the final small
   * aggregate, which PlanSpec locks. Bucketed copies are written once per
-  * (session, dataset) under the session's scratch dir and dropped from
-  * the catalog on dataset switch (same lifecycle as the other memoized
-  * per-dataset frames).
+  * (session, dataset) under a fresh temp dir — a [[graft.Stages]] node, so
+  * a dataset switch (or the session stopping) drops both tables from the
+  * catalog and deletes that dir; whatever is left at JVM exit goes with
+  * the process's scratch dir.
   */
 object Bucketing {
   val NumBuckets = 8
 
-  private val written =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), Unit]()
+  /** Parent of every bucketed copy this process writes, deleted at JVM
+    * exit: the registry releases a copy only when a later request evicts
+    * it, so the last one would otherwise outlive the process. */
+  private lazy val scratch: java.nio.file.Path = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_bucketed")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile))
+    dir
+  }
 
   private def tableName(base: String, dataset: String): String =
     // catalog identifiers: keep [a-z0-9_]
@@ -35,8 +42,8 @@ object Bucketing {
     * for `dataset`, writing them at most once per (session, dataset). */
   def ensureBucketed(s: SparkSession, dataset: String): (String, String) = {
     val (ot, lt) = (tableName("orders", dataset), tableName("lineitem", dataset))
-    written.computeIfAbsent((s, dataset), _ => {
-      val root = java.nio.file.Files.createTempDirectory("graft_bucketed").toString
+    graft.Stages.node("relational.bucketed", s, dataset, (root: String) => drop(s, Seq(ot, lt), root)) {
+      val root = java.nio.file.Files.createTempDirectory(scratch, "tables").toString
       for ((name, df, key) <- Seq(
         (ot, Tables.orders(s, dataset).select("o_orderkey", "o_orderpriority"), "o_orderkey"),
         (lt, Tables.lineitem(s, dataset).select("l_orderkey", "l_quantity"), "l_orderkey"))) {
@@ -51,8 +58,16 @@ object Bucketing {
           .option("path", s"$root/$name")
           .saveAsTable(name)
       }
-    })
+      root
+    }
     (ot, lt)
+  }
+
+  /** Drop the bucketed tables (while the session lives) and delete the
+    * external files behind them. */
+  private def drop(s: SparkSession, tables: Seq[String], root: String): Unit = {
+    if (!s.sparkContext.isStopped) tables.foreach(t => s.sql(s"DROP TABLE IF EXISTS $t"))
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
   }
 
   /** Bucket-co-located orders x lineitem join + per-priority aggregate.

@@ -13,15 +13,11 @@ object RuleQueries {
   private def disc(s: SparkSession, d: String): DataFrame =
     graft.pm.PmQueries.disc(s, d)
 
-  /** ar_features and ar_rules share the feature table: memoize + persist
+  /** ar_features and ar_rules share the feature table: one session stage
     * (same pattern as the discovery stage). */
-  private val featCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
-  private def feats(s: SparkSession, d: String): DataFrame = {
-    graft.pm.PmQueries.evictOthers(featCache, s, d)
+  private def feats(s: SparkSession, d: String): DataFrame =
     // featuresTable's output is already an eagerly-staged leaf (round 7)
-    featCache.computeIfAbsent((s, d), _ => Features.featuresTable(disc(s, d)))
-  }
+    graft.Stages.frame("rules.features", s, d)(Features.featuresTable(disc(s, d)))
 
   /** The three ActivationRulesMode groupings (reference config.py:7-10),
     * as (mode name, Spark group column, DuckDB group expression). `grp` for
@@ -31,23 +27,22 @@ object RuleQueries {
     ("_by_activity", "firing_activity", "firing_activity"),
     ("_by_type", "grp", "activities || '|' || batch_type"))
 
-  /** Fitted rulesets per (session, sfDir, mode) — memoized so the scoring
-    * query and the dynamically generated oracle SQL (dumped by Verify AFTER
-    * the queries ran) see the same fit. Gate-passed groups whose fit found
-    * no surviving ruleset stay in the map as None (reference: empty rules
-    * dict, activation_rules.py:240) — their predicate scores as FALSE, so
-    * the scoring surface exists at every scale, not only when a rule
-    * happens to clear min-support. */
-  private val fitCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), Map[String, Option[RuleSet]]]()
   // per-mode last fit — concurrent map, NOT a read-modify-write on a plain
   // Map: Verify runs the three scoring queries concurrently and a lost
   // update silently downgrades a mode's gate row to rows-only.
   private val lastFits =
     new java.util.concurrent.ConcurrentHashMap[String, Map[String, Option[RuleSet]]]()
+
+  /** Fitted rulesets per (session, sfDir, mode) — one session stage per
+    * mode, so the scoring query and the dynamically generated oracle SQL
+    * (dumped by Verify AFTER the queries ran) see the same fit. Gate-passed
+    * groups whose fit found no surviving ruleset stay in the map as None
+    * (reference: empty rules dict, activation_rules.py:240) — their
+    * predicate scores as FALSE, so the scoring surface exists at every
+    * scale, not only when a rule happens to clear min-support. */
   private def fitted(s: SparkSession, d: String, groupCol: String): Map[String, Option[RuleSet]] = {
-    val f = fitCache.computeIfAbsent((s, d, groupCol),
-      _ => Ripper.fitPerGroupAll(scoreFrame(s, d, groupCol), groupCol))
+    val f = graft.Stages.node(s"rules.fit.$groupCol", s, d, (_: Map[String, Option[RuleSet]]) => ())(
+      Ripper.fitPerGroupAll(scoreFrame(s, d, groupCol), groupCol))
     lastFits.put(groupCol, f)
     f
   }

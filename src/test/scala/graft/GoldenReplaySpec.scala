@@ -23,7 +23,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     // stage the enabled frame to a leaf: discoverFull references it many
     // times, and Catalyst re-analyzes each reference's full subtree per
     // action — over a leaf the expansion is trivial (same pattern as
-    // PmQueries.enabledStage in the production path)
+    // the pm.enabled stage in the production path)
     val en = graft.Pinned.stage(EnabledTime.withEnabled(
       log.select($"event_id", $"case_id", $"activity", $"resource", $"start_us", $"end_us")))
     // enabled time never exceeds start
@@ -193,7 +193,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     // stage the enabled frame to a leaf: discoverFull references it many
     // times, and Catalyst re-analyzes each reference's full subtree per
     // action — over a leaf the expansion is trivial (same pattern as
-    // PmQueries.enabledStage in the production path)
+    // the pm.enabled stage in the production path)
     val en = graft.Pinned.stage(EnabledTime.withEnabled(
       log.select($"event_id", $"case_id", $"activity", $"resource", $"start_us", $"end_us")))
     val d = graft.Pinned.stage(BatchDiscovery.discoverFull(en))
@@ -290,7 +290,7 @@ class GoldenReplaySpec extends AnyFunSuite {
     // stage the enabled frame to a leaf: discoverFull references it many
     // times, and Catalyst re-analyzes each reference's full subtree per
     // action — over a leaf the expansion is trivial (same pattern as
-    // PmQueries.enabledStage in the production path)
+    // the pm.enabled stage in the production path)
     val en = graft.Pinned.stage(EnabledTime.withEnabled(
       log.select($"event_id", $"case_id", $"activity", $"resource", $"start_us", $"end_us"),
       l2lThreshold = Some(EnabledTime.L2lThreshold)))

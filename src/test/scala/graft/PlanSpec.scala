@@ -14,6 +14,23 @@ class PlanSpec extends AnyFunSuite {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sfDir).queryExecution.executedPlan.toString
 
+  /** Run `check` over every query's executed plan, in name order, and
+    * collect one line per query that fails to plan or is flagged — a bad
+    * input in one query must not hide the rest of the surface. */
+  private def auditSurface(
+      check: (String, org.apache.spark.sql.execution.SparkPlan) => Option[String]): Seq[String] =
+    SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, fn) =>
+      auditOne(n)(check(n, fn(spark, sfDir).queryExecution.executedPlan))
+    }
+
+  /** `audit`'s offence, or the error it threw, as one line naming `n`. */
+  private def auditOne(n: String)(audit: => Option[String]): Option[String] =
+    try audit.map(o => s"$n: $o")
+    catch { case scala.util.control.NonFatal(e) =>
+      Some(s"$n: failed to plan: ${e.getClass.getSimpleName}: ${
+        String.valueOf(e.getMessage).linesIterator.take(1).mkString}")
+    }
+
   test("a6: filter pushed to the parquet scan, schema pruned") {
     val p = planOf("a6_scan_prune")
     assert(p.contains("PushedFilters:") && p.contains("GreaterThanOrEqual(p_size,40)"),
@@ -415,39 +432,35 @@ class PlanSpec extends AnyFunSuite {
       "j7_ingest_upsert_mm", "st_ingest", "j3_semdedup_retrain",
       "j2_bloom_scale_upsert2", "j2_lsh_recall",
       "j2_source_overlap")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, fn) =>
-      val p = fn(spark, sfDir).queryExecution.executedPlan.toString
-      if ((p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
-          && !allowed(n)) Some(n) else None
+    def hasProduct(p: String) =
+      p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin")
+    val offenders = auditSurface { (n, plan) =>
+      Option.when(hasProduct(plan.toString) && !allowed(n))(
+        "unreviewed product join — broadcast side must be bounded")
     }
-    assert(offenders.isEmpty,
-      s"unreviewed product join in: ${offenders.mkString(", ")} — broadcast side must be bounded")
-    // memoized queries (j2_neardup_pairs and everything over discCache)
-    // present a checkpoint-RDD leaf to the audit above, hiding their real
-    // join tree — audit the RAW lazy constructors behind them too
-    val rawPlans = Seq(
-      "raw:nearDupPairs" ->
-        ext.Dedup.nearDupPairs(Tables.documents(spark, sfDir)),
-      "raw:jaccardNgramPairs" ->
-        ext.Dedup.jaccardNgramPairs(Tables.documents(spark, sfDir)))
-    val rawOffenders = rawPlans.flatMap { case (n, df) =>
-      val p = df.queryExecution.executedPlan.toString
-      if (p.contains("CartesianProduct") || p.contains("BroadcastNestedLoopJoin"))
-        Some(n) else None
-    }
-    assert(rawOffenders.isEmpty,
-      s"product join hidden behind a memo: ${rawOffenders.mkString(", ")}")
-    // semDedup is memoized too, and its REVIEWED product joins are the
-    // 1-row stride frame (2 refs) and the <= ceil(sqrt(N))-row trained
-    // centroid frame (Lloyd rounds + assignment) — bound the count so an
-    // UNREVIEWED product join cannot hide among them
-    val semPlan = ext.Similarity.semDedup(Tables.embeddings(spark, sfDir))
-      .queryExecution.executedPlan.toString
-    val semQuad = "CartesianProduct|BroadcastNestedLoopJoin".r
-      .findAllIn(semPlan).size
-    assert(semQuad <= 8,
-      s"raw semDedup carries $semQuad product joins — more than the reviewed stride/centroid broadcasts")
+    // memoized queries (j2_neardup_pairs and everything over the pm.disc
+    // stage) present a checkpoint-RDD leaf to the audit above, hiding
+    // their real join tree — audit the RAW lazy constructors behind them too
+    def rawPlan(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan.toString
+    val rawOffenders = Seq(
+      auditOne("raw:nearDupPairs")(Option.when(hasProduct(rawPlan(
+        ext.Dedup.nearDupPairs(Tables.documents(spark, sfDir)))))("product join hidden behind a memo")),
+      auditOne("raw:jaccardNgramPairs")(Option.when(hasProduct(rawPlan(
+        ext.Dedup.jaccardNgramPairs(Tables.documents(spark, sfDir)))))("product join hidden behind a memo")),
+      // semDedup is memoized too, and its REVIEWED product joins are the
+      // 1-row stride frame (2 refs) and the <= ceil(sqrt(N))-row trained
+      // centroid frame (Lloyd rounds + assignment) — bound the count so an
+      // UNREVIEWED product join cannot hide among them
+      auditOne("raw:semDedup") {
+        val semQuad = "CartesianProduct|BroadcastNestedLoopJoin".r
+          .findAllIn(rawPlan(ext.Similarity.semDedup(Tables.embeddings(spark, sfDir)))).size
+        Option.when(semQuad > 8)(
+          s"$semQuad product joins — more than the reviewed stride/centroid broadcasts")
+      }).flatten
     graft.Pinned.release(spark)
+    val all = offenders ++ rawOffenders
+    assert(all.isEmpty, s"${all.size} product-join audit failure(s):\n${all.mkString("\n")}")
   }
 
   test("packFit: range shuffles are exactly the two ranks (doc-grain permutation + window-grain bin cumsum)") {
@@ -489,14 +502,14 @@ class PlanSpec extends AnyFunSuite {
     // partition-less WindowExec in every query plan must sit over a __pid
     // aggregation.
     import org.apache.spark.sql.execution.window.WindowExec
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (n, fn) =>
-      fn(spark, sfDir).queryExecution.executedPlan.collect {
+    val offenders = auditSurface { (_, plan) =>
+      Option.when(plan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty &&
-          !w.child.toString.contains("__pid") => n
-      }
-    }.distinct
-    assert(offenders.isEmpty,
-      s"single-partition window over a non-__pid grain in: ${offenders.mkString(", ")}")
+          !w.child.toString.contains("__pid") => w
+      }.nonEmpty)("single-partition window over a non-__pid grain")
+    }
     graft.Pinned.release(spark)
+    assert(offenders.isEmpty,
+      s"${offenders.size} window audit failure(s):\n${offenders.mkString("\n")}")
   }
 }
